@@ -35,16 +35,20 @@ class Span:
     batch: int | None
     start: float
     end: float | None = None
+    phase: str = "timed"
     attrs: dict = field(default_factory=dict)
 
 
 class Tracer:
-    """Per-thread span stacks; spans of one batch share its batch id."""
+    """Per-thread span stacks; spans of one batch share its batch id.
+    ``phase`` tags every span opened while it is set: the timed phase, or
+    one of the traced run's side measurements."""
 
     def __init__(self, spark, trace_id: str, enabled: bool) -> None:
         self.sc = spark.sparkContext
         self.trace_id = trace_id
         self.enabled = enabled
+        self.phase = "timed"
         self.spans: list[Span] = []
         self._ids = itertools.count(1)
         self._local = threading.local()
@@ -57,7 +61,7 @@ class Tracer:
     def _label(self, span: Span | None) -> tuple[str | None, str | None]:
         if span is None:
             return None, None
-        return f"{self.trace_id}|batch={span.batch}|{span.layer}.{span.name}", str(span.id)
+        return f"{self.trace_id}|{span.phase}|batch={span.batch}|{span.layer}.{span.name}", str(span.id)
 
     def call(self, layer: str, name: str, fn, *args, batch: int | None = None, **kwargs):
         if not self.enabled:
@@ -66,7 +70,7 @@ class Tracer:
         parent = stack[-1] if stack else None
         if batch is None and parent is not None:
             batch = parent.batch
-        span = Span(next(self._ids), parent.id if parent else None, name, layer, batch, time.time())
+        span = Span(next(self._ids), parent.id if parent else None, name, layer, batch, time.time(), phase=self.phase)
         self.spans.append(span)
         stack.append(span)
         desc, sid = self._label(span)
@@ -94,14 +98,18 @@ class Tracer:
 
     def add_closed(self, layer: str, name: str, batch: int | None, start: float, end: float, **attrs) -> None:
         """Record a span measured elsewhere (e.g. from streaming progress)."""
-        self.spans.append(Span(next(self._ids), None, name, layer, batch, start, end, attrs))
+        self.spans.append(Span(next(self._ids), None, name, layer, batch, start, end, self.phase, attrs))
 
-    def durations_ms(self, layer: str, name: str) -> list[float]:
-        return [(s.end - s.start) * 1000 for s in self.spans if s.layer == layer and s.name == name and s.end]
+    def find(self, layer: str, name: str, phase: str = "timed") -> list[Span]:
+        return [s for s in self.spans if s.layer == layer and s.name == name and s.phase == phase and s.end]
+
+    def durations_ms(self, layer: str, name: str, phase: str = "timed") -> list[float]:
+        return [(s.end - s.start) * 1000 for s in self.find(layer, name, phase)]
 
 
 def parse_event_log(path: str) -> dict[int, dict]:
-    """Job id -> {span, start, end (epoch s), cpu_ms, shuffle_bytes, output_bytes}."""
+    """Job id -> {span, start, end (epoch s), cpu_ms, shuffle_bytes,
+    output_bytes, output_records}."""
     jobs: dict[int, dict] = {}
     stage_job: dict[int, int] = {}
     with open(path) as fh:
@@ -121,6 +129,7 @@ def parse_event_log(path: str) -> dict[int, dict]:
                     "cpu_ms": 0.0,
                     "shuffle_bytes": 0,
                     "output_bytes": 0,
+                    "output_records": 0,
                 }
                 for sid in ev.get("Stage IDs", []):
                     stage_job[sid] = jid
@@ -134,6 +143,7 @@ def parse_event_log(path: str) -> dict[int, dict]:
                 job["cpu_ms"] += m.get("Executor CPU Time", 0) / 1e6
                 job["shuffle_bytes"] += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0)
                 job["output_bytes"] += (m.get("Output Metrics") or {}).get("Bytes Written", 0)
+                job["output_records"] += (m.get("Output Metrics") or {}).get("Records Written", 0)
     return jobs
 
 
@@ -168,6 +178,7 @@ def attribute(spans: list[Span], jobs: dict[int, dict]) -> None:
             cpu_ms=round(sum(j["cpu_ms"] for j in mine), 3),
             shuffle_bytes=sum(j["shuffle_bytes"] for j in mine),
             output_bytes=sum(j["output_bytes"] for j in mine),
+            output_records=sum(j["output_records"] for j in mine),
         )
         if s.end is not None:
             covered = _covered([(j["start"], j["end"]) for j in mine], s.start, s.end)
@@ -177,6 +188,6 @@ def attribute(spans: list[Span], jobs: dict[int, dict]) -> None:
 def write_spans(path: str, trace_id: str, spans: list[Span]) -> None:
     with open(path, "w") as fh:
         for s in spans:
-            rec = {"trace": trace_id, "span": s.id, "parent": s.parent, "layer": s.layer, "name": s.name,
-                   "batch": s.batch, "start": s.start, "end": s.end, **s.attrs}
+            rec = {"trace": trace_id, "span": s.id, "parent": s.parent, "phase": s.phase, "layer": s.layer,
+                   "name": s.name, "batch": s.batch, "start": s.start, "end": s.end, **s.attrs}
             fh.write(json.dumps(rec) + "\n")

@@ -4,7 +4,11 @@
 sets up, runs the workload's timed phase, checks the outputs against the
 correctness model and writes a result JSON. ``--trace 1`` adds the Spark
 event log, spans around calls into the engine's modules and side
-measurements of single layers; its numbers are per-layer only.
+measurements of single layers; its numbers are per-layer only. The side
+measurements are checked like the timed phase: ``ingest_bulk`` adds
+small batches (per-batch fixed cost) and copy-on-write upserts onto a
+key-clustered preload; ``cdc_stream`` adds a pass over registered queries,
+each checked against its DuckDB oracle.
 
 Set-up is everything from process spawn until the first timed batch can
 start: imports, ``get_spark`` (which ships the package), pipeline
@@ -180,11 +184,139 @@ class IngestBulk:
             failures.append(f"{bad_null} visible rows lost required fields")
         return failures
 
-    def side_layers(self, tracer: Tracer) -> dict:
+    def side_layers(self, tracer: Tracer) -> tuple[dict, list[str], int]:
+        """Side measurements: (metrics, failures, operations attempted)."""
         pv = []
         for b in self.spec["batches"][:3]:
             pv.append(parse_validate_ms(self.read(b["dir"]), self.value_schema))
-        return {"schema.parse_validate_ms": median_or_zero(pv)}
+        # per-batch fixed cost: latency = fixed + rows * per-row, fitted
+        # through full-size and tenth-size batches on a fresh sink
+        p = self.pipeline("fixed")
+        small, full = [], []
+        for i, (sb, fb) in enumerate(zip(self.spec["small_batches"], self.spec["batches"])):
+            for lat, b, bid in ((small, sb, 2 * i), (full, fb, 2 * i + 1)):
+                t = time.perf_counter()
+                p.run_batch(self.read(b["dir"]), bid)
+                lat.append((time.perf_counter() - t) * 1000)
+        d, s_ms, f_ms = gen.FIXED_DIVISOR, statistics.median(small), statistics.median(full)
+        fixed = (d * s_ms - f_ms) / (d - 1)
+        m = {
+            "schema.parse_validate_ms": median_or_zero(pv),
+            "ingest_bulk.batch_fixed_ms": fixed,
+            "ingest_bulk.fixed_cost_pct": 100 * fixed / f_ms,
+        }
+        self.cow = CowMerge(self.spark, self.work, self.spec["cow"])
+        cow_m, failures = self.cow.run(tracer)
+        m.update(cow_m)
+        return m, failures, 2 * len(small) + 1 + len(self.spec["cow"]["batches"])
+
+    def traced_layers(self, tracer: Tracer) -> dict:
+        return self.cow.traced_layers(tracer)
+
+
+class CowMerge:
+    """Keyed copy-on-write upserts (``committed``, ``upsert_mode="cow"``)
+    through ``run_batch`` onto a key-clustered preload. Each batch updates
+    keys of one slice of the key space and inserts new keys, so the
+    zone-map/bloom planner can leave the other slices' files untouched."""
+
+    def __init__(self, spark, work: str, spec: dict) -> None:
+        from pyspark.sql import types as T
+
+        self.spark, self.work, self.spec = spark, work, spec
+        self.value_schema = T.StructType(
+            [
+                T.StructField("id", T.LongType(), False),
+                T.StructField("seq", T.LongType(), True),
+                T.StructField("name", T.StringType(), True),
+                T.StructField("balance", T.DoubleType(), True),
+                T.StructField("region", T.StringType(), True),
+                T.StructField("updated_at", T.LongType(), True),
+            ]
+        )
+
+    def read(self, path: str):
+        return self.spark.read.schema("topic string, partition int, offset long, key string, value string").parquet(path)
+
+    def run(self, tracer: Tracer) -> tuple[dict, list[str]]:
+        from kafka_connect_bigquery_storage_write_spark.config import PipelineConfig
+        from kafka_connect_bigquery_storage_write_spark.sinks.sink_table import ManifestSinkTable
+        from kafka_connect_bigquery_storage_write_spark.streaming.pipeline import IngestPipeline
+
+        base = os.path.join(self.work, "out", "cow")
+        cfg = PipelineConfig(sink_path=f"{base}/sink", dlq_path=f"{base}/dlq", write_mode="committed",
+                             upsert_keys=["id"], upsert_order_col="seq", upsert_mode="cow")
+        cols = self.spec["columns"]
+        preload = (
+            self.spark.read.schema(self.value_schema).parquet(self.spec["preload"])
+            .repartitionByRange(gen.COW_SLICES, "id").sortWithinPartitions("id")
+        )
+        tracer.phase = "cow_seed"
+        t = time.perf_counter()
+        tracer.call("sinks.sink_table", "write_batch", ManifestSinkTable(cfg.sink_path).write_batch, preload, 0, batch=0)
+        seed_ms = (time.perf_counter() - t) * 1000
+        self.pipe = pipe = IngestPipeline(config=cfg, value_schema=self.value_schema)
+        tracer.wrap(pipe, "process_batch", "streaming.pipeline", batch_arg=1)
+        tracer.wrap(pipe._sink, "log_changes", "sinks.sink_table", batch_arg=1)
+        merged: list[tuple] = []
+        merge = pipe._sink.merge_rows_pruned
+
+        def merge_and_keep(*args, **kwargs):
+            res = merge(*args, **kwargs)
+            merged.append((tracer.phase, res))
+            return res
+
+        pipe._sink.merge_rows_pruned = merge_and_keep
+        tracer.wrap(pipe._sink, "merge_rows_pruned", "sinks.sink_table")
+        tracer.phase = "cow_warm"
+        stats = [pipe.run_batch(self.read(self.spec["warm"]["dir"]), 1)]
+        tracer.phase = "cow"
+        lat = []
+        t0 = time.time()
+        for i, b in enumerate(self.spec["batches"]):
+            t = time.perf_counter()
+            stats.append(pipe.run_batch(self.read(b["dir"]), i + 2))
+            lat.append((time.perf_counter() - t) * 1000)
+        visible = pipe.read_sink(self.spark).count()
+        wall = time.time() - t0
+        tracer.phase = "timed"
+
+        failures = []
+        batches = [self.spec["warm"]] + self.spec["batches"]
+        rows_in = sum(b["rows"] for b in batches)
+        if sum(st.input_rows for st in stats) != rows_in or sum(st.written_rows for st in stats) != rows_in:
+            failures.append("cow: written rows != input rows")
+        state = {r["id"]: [r[c] for c in cols] for r in self.spark.read.parquet(self.spec["preload"]).collect()}
+        for b in batches:
+            latest: dict[int, list] = {}
+            for rec in b["model"]:
+                if rec[0] not in latest or rec[1] > latest[rec[0]][1]:
+                    latest[rec[0]] = rec
+            state.update(latest)
+        got = {r["id"]: [r[c] for c in cols] for r in pipe.read_sink(self.spark).collect()}
+        if got != state:
+            diff = sum(1 for k in set(got) | set(state) if got.get(k) != state.get(k))
+            failures.append(f"cow: visible table differs from the last-writer-wins model on {diff} keys")
+        if visible != len(state):
+            failures.append("cow: visible-read count differs from the model")
+        timed = [res for phase, res in merged if phase == "cow"]
+        if len(timed) != len(self.spec["batches"]) or any(r is None for r in timed):
+            failures.append("cow: a timed batch did not merge")
+            timed = [r for r in timed if r is not None]
+        return {
+            "merge_cow.rows_per_s": sum(b["rows"] for b in self.spec["batches"]) / wall,
+            "merge_cow.batch_p50_ms": statistics.median(lat),
+            "sink.seed_load_ms": seed_ms,
+            "sink.merge_ms": median_or_zero(tracer.durations_ms("sinks.sink_table", "merge_rows_pruned", "cow")),
+            "sink.log_changes_ms": median_or_zero(tracer.durations_ms("sinks.sink_table", "log_changes", "cow")),
+            "sink.files_rewritten": median_or_zero([r[1] for r in timed]),
+            "sink.files_kept": median_or_zero([r[2] for r in timed]),
+        }, failures
+
+    def traced_layers(self, tracer: Tracer) -> dict:
+        """Rows the merges wrote, per changed key (needs the event log)."""
+        written = sum(s.attrs.get("output_records", 0) for s in tracer.find("sinks.sink_table", "merge_rows_pruned", "cow"))
+        return {"sink.rewrite_ratio": written / sum(b["changed_keys"] for b in self.spec["batches"])}
 
 
 class CdcStream:
@@ -236,7 +368,7 @@ class CdcStream:
     def timed(self, tracer: Tracer) -> dict:
         t0 = time.time()
         progress = self.drain(self.pipe, self.spec["stream_dir"])
-        tracer.call("sinks.sink_table", "commit", self.pipe.commit)
+        self.pipe.commit()  # the traced run wraps the sink's commit
         visible = tracer.call("sinks.sink_table", "read", lambda: self.pipe.read_sink(self.spark).count())
         wall = time.time() - t0
         return {
@@ -295,7 +427,8 @@ class CdcStream:
             failures.append("visible-read count differs from the model")
         return failures
 
-    def side_layers(self, tracer: Tracer) -> dict:
+    def side_layers(self, tracer: Tracer) -> tuple[dict, list[str], int]:
+        """Side measurements: (metrics, failures, operations attempted)."""
         from pyspark.sql import types as T
 
         from kafka_connect_bigquery_storage_write_spark.schema.avro import avro_decode_to_json, avro_schema_to_spark
@@ -309,7 +442,74 @@ class CdcStream:
             decoded = avro_decode_to_json(raw, "value", self.avro_json, confluent=True)
             dec.append(time_noop(decoded))
             pv.append(parse_validate_ms(decoded.localCheckpoint(eager=True), value_schema))
-        return {"schema.avro_decode_ms": median_or_zero(dec), "schema.parse_validate_ms": median_or_zero(pv)}
+        m = {"schema.avro_decode_ms": median_or_zero(dec), "schema.parse_validate_ms": median_or_zero(pv)}
+        qm, failures = query_pass(self.spark, tracer, self.spec["tables"])
+        m.update(qm)
+        return m, failures, len(QUERY_MIX)
+
+    def traced_layers(self, tracer: Tracer) -> dict:
+        m = {}
+        for span in (s for s in tracer.spans if s.layer == "queries" and s.phase == "query"):
+            short = span.name.split("_")[0]
+            m[f"query.{short}.wall_ms"] = (span.end - span.start) * 1000
+            m[f"query.{short}.jobs"] = span.attrs.get("jobs", 0)
+            m[f"query.{short}.executor_cpu_ms"] = span.attrs.get("cpu_ms", 0.0)
+            m[f"query.{short}.shuffle_bytes"] = span.attrs.get("shuffle_bytes", 0)
+            m[f"query.{short}.driver_gap_ms"] = span.attrs.get("driver_gap_ms", 0.0)
+        return m
+
+
+# relational, skew, pandas-UDF, text, graph and dedup families
+QUERY_MIX = (
+    "q01_pricing_summary",
+    "q03_shipping_priority",
+    "q05_supplier_region_volume",
+    "q49_salted_join",
+    "q61_apply_in_pandas_user_stats",
+    "q136_bm25_ranking",
+    "q168_triangle_count",
+    "q32_minhash_lsh_near_dups",
+)
+
+
+def query_pass(spark, tracer: Tracer, tables: dict) -> tuple[dict, list[str]]:
+    """A warm-up pass over ``QUERY_MIX`` on the tenth-size tables, then one
+    timed pass on the full-size ones, each query opened as a span. Every
+    timed result must equal its ``oracle_sql()`` on DuckDB, compared as
+    ``harness_canon.rowset`` canonicalises both."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from kafka_connect_bigquery_storage_write_spark.harness_canon import rowset
+
+    registry, oracles = entry.queries(), entry.oracle_sql()
+    for name in QUERY_MIX:
+        registry[name](spark, tables["warm"]).collect()
+
+    def run(name: str):
+        df = registry[name](spark, tables["timed"])
+        return df.columns, [tuple(r) for r in df.collect()]
+
+    tracer.phase = "query"
+    results = {}
+    t0 = time.time()
+    for name in QUERY_MIX:
+        results[name] = tracer.call("queries", name, run, name)
+    suite_s = time.time() - t0
+    tracer.phase = "timed"
+
+    con = duckdb.connect()
+    for path in glob.glob(os.path.join(tables["timed"], "*.parquet")):
+        name = os.path.basename(path)[: -len(".parquet")]
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    failures = []
+    for name, (cols, rows) in results.items():
+        cur = con.execute(oracles[name])
+        want = rowset(cur.fetchall(), [d[0] for d in cur.description])
+        if not rows or rowset(rows, cols) != want:
+            failures.append(f"{name}: {len(rows)} rows differ from the DuckDB oracle ({len(want)} rows)")
+    con.close()
+    return {"query_mix.suite_s": suite_s}, failures
 
 
 def progress_start(p) -> float:
@@ -364,9 +564,8 @@ def install_spans(tracer: Tracer, pipe) -> None:
 
 
 def layer_metrics(wl, tracer: Tracer, res: dict, reasons: dict[str, int]) -> dict:
-    spans = tracer.spans
-    batches = [s for s in spans if s.layer == "streaming.pipeline" and s.name == "process_batch"]
-    writes = [s for s in spans if s.name == "write_batch"]
+    batches = tracer.find("streaming.pipeline", "process_batch")
+    writes = tracer.find("sinks.sink_table", "write_batch")
     sink_root = wl.pipe._sink.root
     data_files = glob.glob(os.path.join(sink_root, "data", "**", "*.parquet"), recursive=True)
     n = max(1, len(batches))
@@ -395,11 +594,26 @@ def layer_metrics(wl, tracer: Tracer, res: dict, reasons: dict[str, int]) -> dic
         ("latestOffset", "latest_offset_ms"),
     ):
         m[f"stream.{name}"] = median_or_zero([p["durationMs"].get(key, 0) for p in res.get("progress", [])])
+    # how trigger latency grows with table state: p50 of the first and of
+    # the last third of the triggers
+    trig = [p["durationMs"]["triggerExecution"] for p in res.get("progress", [])]
+    third = len(trig) // 3
+    if third:
+        m["stream.trigger_early_p50_ms"] = statistics.median(trig[:third])
+        m["stream.trigger_late_p50_ms"] = statistics.median(trig[-third:])
     return m
 
 
+def old_gen_peak_mb(spark) -> float:
+    """Peak occupancy of the JVM's old generation: the heap the run kept
+    alive, which the tree's RSS cannot separate from heap sizing."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    peaks = [p.getPeakUsage().getUsed() for p in mf.getMemoryPoolMXBeans() if "Old Gen" in p.getName()]
+    return sum(peaks) / 1e6
+
+
 def one_core_rows_per_s(args, work: str, spec: dict) -> float:
-    """Rebuild the session as local[1] in the same JVM and time three
+    """Rebuild the session as local[1] in the same JVM and time two
     ingest_bulk batches on a fresh sink, after the usual warm-up."""
     from kafka_connect_bigquery_storage_write_spark.session import get_spark
 
@@ -410,7 +624,7 @@ def one_core_rows_per_s(args, work: str, spec: dict) -> float:
     wl = IngestBulk(spark, work, spec, args)
     wl.warm("1core")
     wl.setup("1core")
-    res = wl.timed(Tracer(spark, "1core", enabled=False), spec["batches"][:3])
+    res = wl.timed(Tracer(spark, "1core", enabled=False), spec["batches"][:2])
     spark.stop()
     return res["rows"] / res["wall_s"]
 
@@ -432,8 +646,10 @@ def main() -> None:
 
     with open(os.path.join(args.work, "in", "expect.json")) as fh:
         spec = json.load(fh)
-    # initial heap = maximum heap: the heap does not grow at a rate set by
-    # GC timing, which made the tree's peak RSS swing with host speed
+    # initial heap = maximum heap: without it G1 sometimes grows the heap to
+    # its maximum and sometimes not, and the tree's peak RSS jumped between
+    # about 1.7 and 2.4 GB from run to run. The price: peak_rss_mb cannot
+    # see changes inside the heap; jvm.old_gen_peak_mb (traced run) can.
     extra = {"spark.driver.extraJavaOptions": f"-Xms{os.environ['SPARK_GRAFT_DRIVER_MEM']}"}
     evdir = os.path.join(args.work, "events")
     if args.trace:
@@ -483,13 +699,18 @@ def main() -> None:
             batch_ms=lat,
         )
         if args.trace:
-            out["layers"] = wl.side_layers(tracer)
+            heap_mb = old_gen_peak_mb(spark)  # before the side measurements
+            out["layers"], side_failures, side_ops = wl.side_layers(tracer)
+            out["layers"]["jvm.old_gen_peak_mb"] = heap_mb
+            failures += side_failures
+            out["attempted"] += side_ops
             app_id = spark.sparkContext.applicationId
             spark.sparkContext.setJobDescription(None)
             # stop() flushes the event log before it is parsed
             spark.stop()
             attribute(tracer.spans, parse_event_log(os.path.join(evdir, app_id)))
             out["layers"].update(layer_metrics(wl, tracer, res, reasons))
+            out["layers"].update(wl.traced_layers(tracer))
             for p in res.get("progress", []):
                 start = progress_start(p)
                 d = dict(p["durationMs"])
